@@ -5,9 +5,9 @@ The reference DOM-parses a whole OSM file on one thread
 pre-converted parquet (osmium/ogr2ogr land) or spark-xml.  Neither library
 ships in this sandbox, so this module parses with the stdlib incremental
 SAX-style reader (iterparse — constant memory, no DOM) and hands Spark an
-Arrow-backed DataFrame.  The parse is per-file; a directory of .osm files
-parallelizes by file via ``spark.read.text`` of paths + mapInPandas
-(``read_osm_many``).
+Arrow-backed local relation (``_local.local_frame``).  The parse is
+per-file; a directory of .osm files parallelizes by file via a path-list
+DataFrame + mapInPandas (``read_osm_many``).
 
 Element mapping mirrors FIXTURES.md §2-3:
   <node id lat lon><tag k v/></node>   → (id, lat, lon, tags map)
@@ -25,6 +25,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from p3_osm_transformer_spark.sources._local import local_frame
 
 NODE_SCHEMA = T.StructType([
     T.StructField("id", T.LongType()),
@@ -68,17 +70,13 @@ def read_osm(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     nodes, ways = [], []
     for kind, row in iter_osm(path):
         (nodes if kind == "node" else ways).append(row)
-    ndf = spark.createDataFrame(pd.DataFrame(nodes), NODE_SCHEMA) if nodes \
-        else spark.createDataFrame([], NODE_SCHEMA)
-    wdf = spark.createDataFrame(pd.DataFrame(ways), WAY_SCHEMA) if ways \
-        else spark.createDataFrame([], WAY_SCHEMA)
-    return ndf, wdf
+    return local_frame(spark, nodes, NODE_SCHEMA), local_frame(spark, ways, WAY_SCHEMA)
 
 
 def read_osm_many(spark: SparkSession, paths: list[str]) -> tuple[DataFrame, DataFrame]:
     """Directory-scale variant: parallel by file via mapInPandas over the
     path list — each executor parses its files with iter_osm."""
-    pathdf = spark.createDataFrame([(p,) for p in paths], "path string") \
+    pathdf = local_frame(spark, [(p,) for p in paths], "path string") \
         .repartition(max(len(paths), 1))
 
     def parse_nodes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -9,18 +9,23 @@ with optional datatype, `;`/`,`/`.` punctuation, comments — which covers
 every fixture shape the reference ships.  A production deployment would
 swap in rdflib; this keeps the sandbox dependency-free.
 
-Outputs:
+Outputs, each one Arrow-backed ``LocalTableScan`` (``_local.local_frame``:
+no Python-worker job, no shuffle):
 * ``read_turtle_triples``  → (subject, predicate, object, is_literal) rows
 * ``query_addresses_from_turtle`` → the query_addresses DataFrame shape
-  (F1/J7 pivot: predicate-filtered triples → same-row columns, SURVEY §1.3)
+  (F1/J7 pivot: predicate-filtered triples → same-row columns, SURVEY §1.3).
+  The pivot runs on the driver in one pass over the request's few triples;
+  a subject's repeated predicate keeps its first literal in document order.
 """
 
 from __future__ import annotations
 
 import re
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from p3_osm_transformer_spark.sources._local import local_frame
 
 _TOKEN = re.compile(
     r"""\s*(?:
@@ -100,31 +105,28 @@ def parse_turtle(text: str) -> list[tuple[str, str, str, bool]]:
 
 
 def read_turtle_triples(spark: SparkSession, path: str) -> DataFrame:
-    with open(path) as f:
-        triples = parse_turtle(f.read())
-    return spark.createDataFrame(
-        triples, "subject string, predicate string, object string, is_literal boolean")
+    return local_frame(spark, parse_turtle(Path(path).read_text()),
+                       "subject string, predicate string, object string, is_literal boolean")
 
 
 def query_addresses_from_turtle(spark: SparkSession, path: str) -> DataFrame:
     """The E1 request boundary: schema.org address triples → query rows.
 
-    Pivot (SURVEY §1.3): triple-pattern filters (F1) become predicate
-    filters + a groupBy-subject pivot; the correlated lookups
-    (OsmRdfTransformer.java:205-223, J7) become same-row column access.
-    Unlike the reference's last-wins single-Address quirk (W3), every
-    subject yields a query row (superset semantics).
+    Pivot (SURVEY §1.3): triple-pattern filters (F1) become a predicate
+    lookup, the correlated lookups (OsmRdfTransformer.java:205-223, J7)
+    same-row columns.  Unlike the reference's last-wins single-Address quirk
+    (W3), every subject with a wanted literal yields a row.  A missing street
+    is ``""`` (skipped by ``geocode``, F9); locality/country stay NULL.
     """
-    t = read_turtle_triples(spark, path)
     wanted = {
         SCHEMA_NS + "streetAddress": "street_address",
         SCHEMA_NS + "addressLocality": "locality",
         SCHEMA_NS + "addressCountry": "country",
     }
-    mapping = F.create_map(*[F.lit(x) for kv in wanted.items() for x in kv])
-    return (t.filter(F.col("predicate").isin(*wanted.keys()) & F.col("is_literal"))
-            .withColumn("col", mapping[F.col("predicate")])
-            .groupBy(F.col("subject").alias("query_id"))
-            .pivot("col", list(wanted.values()))
-            .agg(F.first("object"))
-            .na.fill("", ["street_address"]))
+    rows: dict[str, dict[str, str]] = {}
+    for subj, pred, obj, is_lit in parse_turtle(Path(path).read_text()):
+        col = wanted.get(pred)
+        if col is not None and is_lit:
+            rows.setdefault(subj, {"query_id": subj}).setdefault(col, obj)
+    return local_frame(spark, [{"street_address": "", **r} for r in rows.values()],
+                       "query_id string, street_address string, locality string, country string")
